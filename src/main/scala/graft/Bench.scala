@@ -207,13 +207,7 @@ object Bench {
     // one confirmation execution behind the same GC fence the timed runs
     // use; returns None if the rerun itself fails (keep the first number)
     def rerunOnce(name: String): Option[Double] = {
-      CacheRegistry.unpersistAll(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(true))
-      System.gc()
-      System.gc()
-      Thread.sleep(100)
+      CacheRegistry.drainForMeasurement(spark)
       val t0 = System.nanoTime()
       try {
         exec(SparkEntry.queries(name)(spark, sfDir))

@@ -53,13 +53,14 @@ object CacheRegistry {
   def trackedCount: Int = frames.size()
 
   /** Full inter-measurement sweep shared by the measurement harnesses
-    * (SkewAudit, ScaleProbe): blocking registry drain, catalog cache
-    * clear, a sweep of the persistent RDDs neither can see (the Pregel
-    * loops return localCheckpoint'ed results whose blocks stay pinned
-    * until GC), then double-gc so the ContextCleaner's weak-ref work from
-    * the first pass is collected by the second. Bench keeps its own copy
-    * of this sequence inline because it conditions the expensive gc on
-    * whether anything was actually pinned — see Bench.scala. */
+    * (SkewAudit, ScaleProbe, Bench's confirmation rerun): blocking
+    * registry drain, catalog cache clear, a sweep of the persistent RDDs
+    * neither can see (the Pregel loops return localCheckpoint'ed results
+    * whose blocks stay pinned until GC), then double-gc so the
+    * ContextCleaner's weak-ref work from the first pass is collected by
+    * the second. Bench's between-run fence is the one variant: it runs
+    * the sweep and the gc only when something was actually pinned (or
+    * the row is a run-once stress row) — see Bench.scala. */
   def drainForMeasurement(spark: org.apache.spark.sql.SparkSession): Unit = {
     unpersistAll(blocking = true)
     spark.catalog.clearCache()

@@ -44,7 +44,7 @@ object Algorithms {
       // (blockSize=3 is the measured planning sweet spot — see Pregel's
       // adaptive-blocks rejection note). Finer loop partitions: the
       // rank/outdeg arithmetic is compute-heavy per row (measured −19%
-      // on q219 at 131072 vs the 500k default; see rowsPerLoopPartition)
+      // on q219 at 131072 vs the 500k default; see LoopSession.rowsPerPartition)
       blockSize = 3, rowsPerPartition = 131072L)
       .select(col("id"), col("val").as("pagerank"))
   }
@@ -98,32 +98,6 @@ object Algorithms {
       // min-label propagation is monotone (see maxValuePropagation)
       blockSize = 3, durableDir = durableDir).vertices
 
-  /** Connected components WITHOUT a vertex program: the alternating
-    * large-star/small-star algorithm (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) — the formulation used
-    * for trillion-edge graphs, here as a complement to the Pregel
-    * [[connectedComponents]] so the engine carries both iterative
-    * paradigms. Each round is two agg+join passes over the EDGE set:
-    *
-    *   large-star: per node u with m = min(N(u) ∪ {u}), rewire every
-    *   BIGGER neighbor v > u to (v, m) — after it, all edges point
-    *   big → small;
-    *   small-star: per node u with m = min(N(u)), rewire the smaller
-    *   neighbors (and u itself) to m.
-    *
-    * Both steps preserve connectivity and strictly shrink the potential,
-    * converging in O(log n) rounds to one star per component rooted at
-    * its minimum id — the same min-label result the Pregel form and the
-    * q47 recursive-CTE oracle produce (pinned by a property spec).
-    *
-    * Scale shape vs Pregel CC: no vertex-state join, no vote aggregate —
-    * each half-round is one groupBy(min) on node id plus one equi-join
-    * back, everything edge-partitioned; a high-degree hub is ONE group in
-    * a partial-aggregated min, not a window. Convergence is detected by
-    * an (edge-count, hash-sum) checksum going stable — one tiny action
-    * per round, against Pregel's full-materialization halt vote. Lineage
-    * is cut with a lazy localCheckpoint every 3 rounds, as in [[Pregel]].
-    */
   /** AQE policy for the alternating-star loop session, keyed on edge
     * count — extracted so the gate is pinned by a spec, not just prose.
     *
@@ -153,38 +127,61 @@ object Algorithms {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m")
     else Seq("spark.sql.adaptive.enabled" -> "false")
 
-  def ccAlternating(vertices: DataFrame, edges: DataFrame,
-                    maxRounds: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = vertices.sparkSession
-    // canonical undirected edge set: deduped, self-loops dropped,
-    // stored big -> small (one small-star's precondition, and exactly
-    // what large-star emits)
-    var e = edges
+  /** [[ccAlternating]]'s canonical undirected edge set: deduped,
+    * self-loops dropped, stored big -> small (one small-star's
+    * precondition, and exactly what large-star emits). */
+  private[graft] def ccCanonicalEdges(edges: DataFrame): DataFrame =
+    edges
       .select(col("src").as("u"), col("dst").as("v"))
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Pregel's loop-session discipline (see Pregel.runWithStats): each
-    // round runs ~5 shuffles over a GRAPH-sized frame — at the session's
-    // default partition count a small graph pays rounds×shuffles×parts
-    // near-empty tasks of pure scheduler overhead (measured 19s → ~4s on
-    // the q112 corpus at local[32]). Size the loop shuffles to the edge
-    // count; AQE off because the loop sizes its shuffles explicitly.
-    val nE = e.count() // also materializes the edge cache
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.min(sessionParts.toLong, nE / 500000L + 1).toInt
-    val loopSession = {
-      val s = org.apache.spark.sql.graft.GraftSessionBridge.cloneSession(spark)
-      s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      ccLoopConfs(nE).foreach { case (k, v) => s.conf.set(k, v) }
-      s
-    }
-    e = org.apache.spark.sql.graft.GraftSessionBridge.rebind(e, loopSession)
-    val live = scala.collection.mutable.ArrayBuffer(e)
+
+  /** Connected components WITHOUT a vertex program: the alternating
+    * large-star/small-star algorithm (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14) — the formulation used
+    * for trillion-edge graphs, here as a complement to the Pregel
+    * [[connectedComponents]] so the engine carries both iterative
+    * paradigms. Each round is two agg+join passes over the EDGE set:
+    *
+    *   large-star: per node u with m = min(N(u) ∪ {u}), rewire every
+    *   BIGGER neighbor v > u to (v, m) — after it, all edges point
+    *   big → small;
+    *   small-star: per node u with m = min(N(u)), rewire the smaller
+    *   neighbors (and u itself) to m.
+    *
+    * Both steps preserve connectivity and strictly shrink the potential,
+    * converging in O(log n) rounds to one star per component rooted at
+    * its minimum id — the same min-label result the Pregel form and the
+    * q47 recursive-CTE oracle produce (pinned by a property spec).
+    *
+    * Scale shape vs Pregel CC: no vertex-state join, no vote aggregate —
+    * each half-round is one groupBy(min) on node id plus one equi-join
+    * back, everything edge-partitioned; a high-degree hub is ONE group in
+    * a partial-aggregated min, not a window. Convergence is detected by
+    * an (edge-count, hash-sum) checksum going stable — one tiny action
+    * per round, against Pregel's full-materialization halt vote. Lineage
+    * is cut with a lazy localCheckpoint every 3 rounds, as in [[Pregel]].
+    */
+  def ccAlternating(vertices: DataFrame, edges: DataFrame,
+                    maxRounds: Int = 20): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    // every persist sits inside the try: materializing the edge cache can
+    // fail, and the finally must release it then too
+    val live = scala.collection.mutable.ArrayBuffer[DataFrame]()
     try {
+      val canonical = ccCanonicalEdges(edges)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      live += canonical
+      // the loop runs on an edge-sized session (see graft.LoopSession):
+      // each round runs ~5 shuffles over a GRAPH-sized frame — at the
+      // session's default partition count a small graph pays
+      // rounds×shuffles×parts near-empty tasks of pure scheduler overhead
+      // (measured 19s → ~4s on the q112 corpus at local[32])
+      val nE = canonical.count() // also materializes the edge cache
+      var e = graft.LoopSession(vertices.sparkSession, nE,
+        confs = ccLoopConfs(nE)).into(canonical)
       var prev = (-1L, 0L)
       var round = 0
       var done = false

@@ -34,8 +34,8 @@ final case class PregelResult(vertices: DataFrame, supersteps: Int)
   * persisted (memory-and-disk) and lineage is truncated with a lazy
   * `localCheckpoint` every `checkpointEvery` supersteps — without it the
   * join-per-iteration plan grows exponentially and kills the driver long
-  * before 100 TB kills the executors. The loop additionally sizes its
-  * shuffle partitions to the graph (see `runWithStats`) and can batch
+  * before 100 TB kills the executors. The loop additionally runs on a
+  * graph-sized session (see [[graft.LoopSession]]) and can batch
   * `blockSize` supersteps per plan to amortize Catalyst's fixed planning
   * cost — the two costs that dominate iterative dataflow once per-task
   * work is small.
@@ -91,24 +91,14 @@ object Pregel {
   def run(vertices: DataFrame, edges: DataFrame, maxIter: Int,
           sendMsg: Column, mergeMsg: Column => Column,
           vprog: (DataFrame, Int) => DataFrame,
-          checkpointEvery: Int = 2, blockSize: Int = 1,
+          blockSize: Int = 1,
           updateEdges: Option[(DataFrame, DataFrame, Int) => DataFrame] = None,
-          rowsPerPartition: Long = rowsPerLoopPartition): DataFrame =
+          rowsPerPartition: Long = graft.LoopSession.rowsPerPartition): DataFrame =
     runWithStats(vertices, edges, maxIter, sendMsg, mergeMsg, vprog,
-      checkpointEvery, blockSize, updateEdges,
-      rowsPerPartition = rowsPerPartition).vertices
+      blockSize, updateEdges, rowsPerPartition = rowsPerPartition).vertices
 
-  /** Default target rows per shuffle partition inside the superstep loop.
-    * A vertex program can pass a finer `rowsPerPartition` when its
-    * supersteps are compute-heavy per row (wide vector state, per-edge
-    * weight arithmetic): q228's 4-landmark array program dropped 27% at
-    * 131072 rows/partition, pagerank/trustrank/longest-path 10-20% —
-    * while programs with many cheap supersteps over small or shrinking
-    * frontiers (SCC's forward/backward passes, alternating-star CC)
-    * measurably LOSE at finer grain because per-superstep fixed cost
-    * scales with partition count. Both regimes clamp to the session
-    * setting, so cluster-scale graphs keep full parallelism either way. */
-  private val rowsPerLoopPartition = 500000L
+  /** Supersteps between hard lineage truncations (and durable writes). */
+  private val checkpointEvery = 2
 
   /** Durable-checkpoint support: a long Pregel run (hundreds of supersteps
     * over a 100 TB-derived graph) must survive a driver loss without
@@ -149,16 +139,15 @@ object Pregel {
   def runWithStats(vertices: DataFrame, edges: DataFrame, maxIter: Int,
                    sendMsg: Column, mergeMsg: Column => Column,
                    vprog: (DataFrame, Int) => DataFrame,
-                   checkpointEvery: Int = 2, blockSize: Int = 1,
+                   blockSize: Int = 1,
                    updateEdges: Option[(DataFrame, DataFrame, Int) => DataFrame] = None,
                    durableDir: Option[String] = None,
                    startStep: Int = 0,
-                   rowsPerPartition: Long = rowsPerLoopPartition): PregelResult = {
+                   rowsPerPartition: Long = graft.LoopSession.rowsPerPartition): PregelResult = {
     require(vertices.columns.contains("id"), "vertices need an `id` column")
     require(edges.columns.contains("src") && edges.columns.contains("dst"),
       "edges need `src` and `dst` columns")
     require(blockSize >= 1, "blockSize must be >= 1")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     require(startStep >= 0, "startStep must be >= 0")
 
     val spark = vertices.sparkSession
@@ -174,36 +163,15 @@ object Pregel {
     try {
     v = vertices.localCheckpoint(true)
 
-    // Size the superstep shuffles to the GRAPH, not the session default.
-    // Cached/checkpointed plans are exempt from AQE partition coalescing
-    // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning defaults
-    // to false), so every superstep of a small graph would otherwise pay
-    // `spark.sql.shuffle.partitions` near-empty tasks per shuffle — at
-    // local[32] that made a 25-vertex PageRank ~10× slower than the data
-    // justifies, and on a 1000-executor cluster it is the same waste in
-    // scheduler RPCs. At real scale rows/rowsPerPartition exceeds the
-    // session setting and the clamp keeps full parallelism.
+    // Size the superstep shuffles to the GRAPH, not the session default
+    // (see graft.LoopSession). AQE is off in the loop session: the loop
+    // sizes its shuffles explicitly, and AQE's per-stage replanning is
+    // pure driver overhead at superstep cadence.
     val nEdges = e.count() // also materializes the edge cache
     val nVerts = v.count() // cheap: v is checkpointed
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.min(sessionParts.toLong,
-      math.max(nVerts, nEdges) / rowsPerPartition + 1).toInt
-
-    // The loop's conf overrides live on a CLONE of the caller's session
-    // (same SparkContext, catalog, cache manager, runtime conf state, and
-    // temp views — only the SQLConf overrides below differ), so concurrent
-    // queries on the caller's session are never planned with loop settings
-    // and two concurrent Pregel runs cannot race a save/restore. AQE is
-    // off in the clone: the loop sizes its shuffles explicitly, and AQE's
-    // per-stage replanning is pure driver overhead at superstep cadence.
-    val loopSession = {
-      val s = org.apache.spark.sql.graft.GraftSessionBridge.cloneSession(spark)
-      s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s
-    }
-    def inLoop(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.GraftSessionBridge.rebind(df, loopSession)
+    val loop = graft.LoopSession(spark, math.max(nVerts, nEdges),
+      rowsPerPartition, confs = Seq("spark.sql.adaptive.enabled" -> "false"))
+    val loopParts = loop.partitions
 
     // Re-cache the edges HASH-PARTITIONED AND SORTED on `src`, the
     // triplets join's key (guide §2.4: operations keyed the same way
@@ -218,18 +186,24 @@ object Pregel {
     // hash(id)-partitioned from superstep 1 on (join/agg output), and
     // LogicalRDD checkpoints preserve partitioning across blocks. This
     // also subsumes the old >2·loopParts coalesce compaction (the
-    // repartition fixes the partition count exactly).
-    e = inLoop {
-      val c = e.repartition(loopParts, col("src"))
+    // repartition fixes the partition count exactly). The G7 rewire below
+    // re-caches through the same definition; `ckpt` swaps the persist for
+    // a lazy lineage-truncating checkpoint.
+    def edgeCache(df: DataFrame, ckpt: Boolean): DataFrame = {
+      val bySrc = df.repartition(loopParts, col("src"))
         .sortWithinPartitions("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      if (ckpt) bySrc.localCheckpoint(false)
+      else bySrc.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    e = loop.into {
+      val c = edgeCache(e, ckpt = false)
       c.count() // materialize (reads the old cache, no recompute)
       e.unpersist(false)
       c
     }
     if (v.queryExecution.toRdd.getNumPartitions > 2 * loopParts)
       v = v.coalesce(loopParts).localCheckpoint(true)
-    v = inLoop(v)
+    v = loop.into(v)
     var sinceCkpt = 0
     while (step < maxIter && !allHalt) {
       val block = math.min(blockSize, maxIter - step)
@@ -315,19 +289,14 @@ object Pregel {
           // ends on `dst` — so without this every post-rewire join
           // re-shuffles the edge set anyway; the explicit repartition
           // pays the same one shuffle and then feeds every later block)
-          val nePlan = inLoop(ne0).repartition(loopParts, col("src"))
-            .sortWithinPartitions("src")
           staleE = e
-          e = if (didCkpt) nePlan.localCheckpoint(false)
-              else nePlan.persist(StorageLevel.MEMORY_AND_DISK)
+          e = edgeCache(loop.into(ne0), ckpt = didCkpt)
         }
       }
     }
 
     // hand the result back on the CALLER's session
-    val result = org.apache.spark.sql.graft.GraftSessionBridge
-      .rebind(v.drop("halt").localCheckpoint(true), spark)
-    PregelResult(result, step)
+    PregelResult(loop.back(v.drop("halt").localCheckpoint(true)), step)
     } finally {
       // also the exception path: without these a failure anywhere above
       // would leave the edge cache and the last vertex frames pinned for

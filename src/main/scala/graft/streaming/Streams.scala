@@ -747,9 +747,9 @@ object Streams {
   private val q206Seq = new java.util.concurrent.atomic.AtomicInteger
 
   /** Target live state rows per state-store partition in the at-scale
-    * stream gates — the streaming counterpart of Pregel's
-    * `rowsPerLoopPartition`. Each stateful operator instantiates one
-    * state store PER shuffle partition and pays a load + commit + WAL
+    * stream gates — the streaming counterpart of
+    * `LoopSession.rowsPerPartition`. Each stateful operator instantiates
+    * one state store PER shuffle partition and pays a load + commit + WAL
     * round per store PER micro-batch, so a 4096-key gate run with the
     * session's core-count shuffle partitions (32 on the bench box)
     * spends its wall-clock on 32-way store maintenance for stores
@@ -768,14 +768,9 @@ object Streams {
     * their streaming queries on this clone; the caller's session and any
     * concurrent queries are untouched. */
   private def stateSizedSession(spark: SparkSession,
-                                expectedKeys: Long): SparkSession = {
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = math.max(2L, math.min(sessionParts.toLong,
-      expectedKeys / keysPerStatePartition + 1)).toInt
-    val s = org.apache.spark.sql.graft.GraftSessionBridge.cloneSession(spark)
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    s
-  }
+                                expectedKeys: Long): SparkSession =
+    graft.LoopSession(spark, expectedKeys, keysPerStatePartition, floor = 2)
+      .session
 
   /** Drain a FINISHED memory-sink streaming query eagerly: materialize
     * the sink's rows, drop its temp view, delete its checkpoint

@@ -111,7 +111,7 @@ class PregelSpec extends GraftSuite {
   }
 
   test("lineage stays bounded across checkpoint cadence") {
-    // 30 supersteps with checkpointEvery=5 must not blow the plan up —
+    // 30 supersteps across the checkpoint cadence must not blow the plan up —
     // this is the Pregel-lineage risk from SURVEY §7.
     val v = Seq((0L, 0L), (1L, 0L)).toDF("id", "value")
     val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
@@ -120,8 +120,7 @@ class PregelSpec extends GraftSuite {
       sendMsg = col("value") + 1,
       mergeMsg = max,
       vprog = (df, _) => df.select(col("id"),
-        greatest(col("value"), coalesce(col("msg"), col("value"))).as("value")),
-      checkpointEvery = 5)
+        greatest(col("value"), coalesce(col("msg"), col("value"))).as("value")))
     val vals = res.select("value").as[Long].collect()
     assert(vals.forall(_ >= 29L))
   }
@@ -173,7 +172,7 @@ class PregelSpec extends GraftSuite {
           least(col("component"), coalesce(col("msg"), col("component")))
             .as("component"),
           coalesce(col("msg") >= col("component"), lit(true)).as("halt")),
-        checkpointEvery = 2, blockSize = 1,
+        blockSize = 1,
         durableDir = durable, startStep = start)
     val uninterrupted = run(vertices, 40, 0, None).vertices
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -256,13 +255,8 @@ class PregelSpec extends GraftSuite {
     // above), and (3) ccAlternating applies ccLoopConfs(nE)
     // unconditionally — so a green q201 hash IS a correctness run
     // through the gated loop session.
-    import org.apache.spark.sql.functions._
-    val nCanonical = Algorithms.q201Edges(spark)
-      .select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct().count()
+    val nCanonical =
+      Algorithms.ccCanonicalEdges(Algorithms.q201Edges(spark)).count()
     assert(nCanonical == 1024L * 1023L + 768L, nCanonical)
     assert(nCanonical >= 1000000L)
     assert(Algorithms.ccLoopConfs(nCanonical).toMap
